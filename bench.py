@@ -253,14 +253,13 @@ def main() -> None:
         file=sys.stderr,
     )
 
-    # seen-filter probe throughput: bloom vs cuckoo on the same 1M-key
-    # seen set and 1M candidates (half seen) — the advisory-filter cost
-    # the scheduling round pays per candidate, plus each filter's
-    # maybe-rate (bloom FPR vs cuckoo FPR at these sizings)
+    # seen-filter probe throughput: the bloom over a 1M-key seen set and
+    # 1M candidates (half seen) — the advisory-filter cost the
+    # scheduling round pays per candidate, plus its maybe-rate (FPR at
+    # this sizing)
     from pyspark.sql import functions as F
 
     from crunchy_spark.bloom import adaptive_m_bits, build_bloom, probe_bloom
-    from crunchy_spark.cuckoo import build_cuckoo, probe_cuckoo
 
     def _skeys(n, offset=0):
         return spark.range(n).select(
@@ -278,27 +277,22 @@ def main() -> None:
         .localCheckpoint()
     )
     bloom = build_bloom(seen_keys, m_bits=adaptive_m_bits(n_seen)).localCheckpoint()
-    cf, co = build_cuckoo(seen_keys, m_buckets=1 << 17)
-    cf, co = cf.localCheckpoint(), co.localCheckpoint()
-    probe_stats = {}
-    for fname, probed in (
-        ("bloom", lambda: probe_bloom(cands, bloom, 32)),
-        ("cuckoo", lambda: probe_cuckoo(cands, cf, co, 1 << 17)),
-    ):
-        probed().count()  # warm
-        t0 = time.time()
-        n_maybe = probed().filter(F.col("_maybe_seen")).count()
-        dt = time.time() - t0
-        probe_stats[fname] = {
+    probe_bloom(cands, bloom, 32).count()  # warm
+    t0 = time.time()
+    n_maybe = probe_bloom(cands, bloom, 32).filter(F.col("_maybe_seen")).count()
+    dt = time.time() - t0
+    probe_stats = {
+        "bloom": {
             "mprobe_per_s": round(n_seen / dt / 1e6, 2),
             "maybe_rate": round(n_maybe / n_seen, 4),
         }
-        print(
-            f"# seen-filter probe [{fname}]: {probe_stats[fname]['mprobe_per_s']}M "
-            f"probes/s, maybe-rate {probe_stats[fname]['maybe_rate']} "
-            f"(true seen rate 0.5)",
-            file=sys.stderr,
-        )
+    }
+    print(
+        f"# seen-filter probe [bloom]: {probe_stats['bloom']['mprobe_per_s']}M "
+        f"probes/s, maybe-rate {probe_stats['bloom']['maybe_rate']} "
+        f"(true seen rate 0.5)",
+        file=sys.stderr,
+    )
 
     sf = os.path.basename(sf_dir.rstrip("/")).replace("sf", "")
     result = {

@@ -7,7 +7,7 @@ scaling efficiency  eff = T_N / (4 * T_4N)  (target >= 0.8).
 The measured job is the engine's scheduling core (the metric's
 definition), running the production code paths:
   read frontier parquet
-    -> RFC-3986 canonicalize (pyarrow-compute pandas UDF, urlnorm.py)
+    -> RFC-3986 canonicalize (pyarrow-compute Arrow-native UDF, urlnorm.py)
     -> SHA-1 fingerprint (JVM)
     -> first-arrival dedup (all-primitive min/min_by HashAggregate,
        map-side combine, zero sorts — frontier.first_arrival)
@@ -439,7 +439,7 @@ single pass can sit entirely inside one; two separated passes per level
 sample two windows — all 8 walls recorded in bench/scaling_result.json).
 
 Measured job (production code paths): read frontier parquet -> RFC-3986
-canonicalize (pyarrow-compute pandas UDF) -> SHA-1 fingerprint ->
+canonicalize (pyarrow-compute Arrow-native UDF) -> SHA-1 fingerprint ->
 first-arrival dedup (all-primitive min/min_by HashAggregate) -> Bloom-
 prefiltered exact anti-join vs seen -> single-window per-host politeness
 pop (partial WindowGroupLimit per map partition; 720/host budget) ->

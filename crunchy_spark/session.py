@@ -4,7 +4,7 @@ Local mode here (one JVM, N threads); the same config block is what we'd
 ship to a real cluster via spark-submit --py-files, minus the master and
 driver-memory overrides. AQE stays on so skewed anti-joins re-plan at
 runtime; Arrow stays on because every Python-side transform in this engine
-is a vectorized pandas UDF (north_rule: zero per-row Python).
+is a vectorized pandas or Arrow UDF (north_rule: zero per-row Python).
 """
 
 from __future__ import annotations

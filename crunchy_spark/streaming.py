@@ -664,6 +664,20 @@ def stream_discovery_plan(
     'fetch' action and the batch plan's fetch_full/conditional_get
     both survive the filter).
 
+    One generation per epoch: the rank cut is only correct over a
+    whole generation, so the input contract differs by mode.
+      non-diff mode: ``need_dir`` takes ONE parquet file per generation
+        (callers must ``coalesce(1)`` each generation before writing
+        it) — the stream reads one file per micro-batch, and a
+        generation written as several part files would be split into
+        several epochs, each with its own (wrong) per-host cut.
+      ``diff_feed=True``: ``need_dir`` is the poller's sink, holding
+        ``epoch=N`` subdirectories. A generation's part files may
+        arrive across several triggers, and Spark never re-delivers
+        the earlier ones; so each micro-batch only names the source
+        epochs it touched, and each such epoch's plan is rebuilt from
+        the whole generation read as a batch from ``need_dir/epoch=N``.
+
     Exactly-once: each generation's plan lands in an epoch=N
     subdirectory with overwrite mode — a crash-replayed micro-batch
     rewrites the identical files (the plan is deterministic in its
@@ -681,33 +695,29 @@ def stream_discovery_plan(
 
     robots = robots.localCheckpoint()  # host-sized dim, pinned once
 
-    def on_batch(batch: DataFrame, epoch_id: int) -> None:
-        need = batch
+    def fetch_needing(need: DataFrame) -> DataFrame:
         if "lastmod_cur" in need.columns and "lastmod" not in need.columns:
             need = need.withColumnRenamed("lastmod_cur", "lastmod")
-        keep = need.filter(~F.col("action").isin("skip", "tombstone"))
+        return need.filter(~F.col("action").isin("skip", "tombstone")).select(
+            "url", "lastmod", "action"
+        )
+
+    def on_batch(batch: DataFrame, epoch_id: int) -> None:
         if diff_feed:
             # plans are keyed by the FEED's generation (epoch column),
-            # not the micro-batch id: a generation's part files may
-            # split across triggers, and the rank cut is only correct
-            # over the whole generation — so the batch is grouped by
-            # source epoch and each group's plan overwrites its own
-            # epoch dir (idempotent on replay AND on re-delivery of a
-            # generation's remaining files: the later write sees the
-            # fuller generation)
-            keep = keep.localCheckpoint()
-            epochs = [r[0] for r in keep.select("epoch").distinct().collect()]
+            # not the micro-batch id; each touched generation is re-read
+            # whole, so a later trigger carrying its remaining part
+            # files overwrites the epoch dir with the full plan
+            epochs = [r[0] for r in batch.select("epoch").distinct().collect()]
             for src_epoch in epochs:
-                gen = keep.filter(F.col("epoch") == src_epoch).select(
-                    "url", "lastmod", "action"
+                gen = batch.sparkSession.read.schema(schema).parquet(
+                    _os.path.join(need_dir, f"epoch={int(src_epoch)}")
                 )
-                discovery_fetch_plan(gen, robots).write.mode(
+                discovery_fetch_plan(fetch_needing(gen), robots).write.mode(
                     "overwrite"
                 ).parquet(_os.path.join(out_dir, f"epoch={int(src_epoch)}"))
             return
-        plan = discovery_fetch_plan(
-            keep.select("url", "lastmod", "action"), robots
-        )
+        plan = discovery_fetch_plan(fetch_needing(batch), robots)
         plan.write.mode("overwrite").parquet(
             _os.path.join(out_dir, f"epoch={int(epoch_id)}")
         )
@@ -736,8 +746,8 @@ def stream_discovery_plan(
         )
     reader = spark.readStream.schema(schema)
     if not diff_feed:
-        # one need-generation FILE per micro-batch; diff-feed mode
-        # instead takes all available files and groups by source epoch
+        # one need-generation FILE per micro-batch (see the docstring's
+        # one-file-per-generation contract)
         reader = reader.option("maxFilesPerTrigger", 1)
     stream = (
         reader.parquet(need_dir)

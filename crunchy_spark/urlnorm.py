@@ -15,8 +15,9 @@ Canonical rule (RFC-3986-flavored, applied uniformly):
   resolve ``/./`` and ``/seg/../`` dot-segments; collapse ``//`` runs in
   the path; strip trailing slashes.
 
-Everything is vectorized pandas string ops inside pandas UDFs — no
-per-row Python (north_rule). The SHA-1 itself runs JVM-side via F.sha1.
+Everything is vectorized pyarrow.compute (RE2) kernels inside one
+Arrow-native UDF — no per-row Python (north_rule). The SHA-1 itself runs
+JVM-side via F.sha1.
 """
 
 from __future__ import annotations
@@ -27,8 +28,6 @@ import pyarrow.compute as pc
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
-
-URL_PARTS_RE = r"^([A-Za-z][A-Za-z0-9+.\-]*)://([^/?#]*)([^?#]*)"
 
 # the Unicode White_Space set (what pyarrow utf8_trim_whitespace strips)
 _UNICODE_WS = (
@@ -57,7 +56,7 @@ def _resolve_path_slow(path: pd.Series) -> pd.Series:
 
 def canonicalize_arrow(arr: pa.Array) -> pa.Array:
     """Vectorized canonicalization of a pyarrow string Array of URLs —
-    the shared kernel under BOTH UDF flavors.
+    the kernel under ``canonicalize_arrow_udf`` and ``canonicalize_series``.
 
     Pure pyarrow.compute kernels (RE2, zero Python-object churn) end to
     end; only rows whose path contains dot-segments or ``//`` runs
@@ -109,8 +108,8 @@ def canonicalize_arrow(arr: pa.Array) -> pa.Array:
 
 
 def canonicalize_series(s: pd.Series) -> pd.Series:
-    """Pandas wrapper over ``canonicalize_arrow`` (tests, pandas-UDF
-    seam, the serial reference simulator)."""
+    """Pandas wrapper over ``canonicalize_arrow`` (tests, the serial
+    reference simulator)."""
     out = canonicalize_arrow(pa.array(s.fillna("").astype(str), type=pa.string()))
     result = out.to_pandas().astype("object")
     result.index = s.index
@@ -129,20 +128,16 @@ def host_series(s: pd.Series) -> pd.Series:
     return out
 
 
-canonicalize_udf = F.pandas_udf(canonicalize_series, T.StringType())
-host_udf = F.pandas_udf(host_series, T.StringType())
-
-
 def _canonicalize_arrow_fn(v: pa.Array) -> pa.Array:
     return canonicalize_arrow(v)
 
 
-# Arrow-NATIVE UDF (Spark 4.1): the same RE2 kernels, but the batch
-# stays a pyarrow Array across the worker boundary — no
-# to_pandas()/astype(object) per-row PyObject churn at either edge.
-# That churn, not the kernels, was the scaling ceiling of the pandas
-# flavor: the canonicalize stage alone measured 8.4s @local[8] ->
-# 5.8s @local[32] (0.36 efficiency) with the pandas boundary.
+# Arrow-NATIVE UDF (Spark 4.1): the batch stays a pyarrow Array across
+# the worker boundary — no to_pandas()/astype(object) per-row PyObject
+# churn at either edge. That churn, not the kernels, was the scaling
+# ceiling of a pandas_udf over the same kernels: the canonicalize stage
+# alone measured 8.4s @local[8] -> 5.8s @local[32] (0.36 efficiency)
+# with the pandas boundary.
 canonicalize_arrow_udf = F.arrow_udf(_canonicalize_arrow_fn, T.StringType())
 
 
@@ -170,18 +165,19 @@ def sha_int_col(sha1_hex: Column) -> Column:
 def host_col(canon: Column) -> Column:
     """Host (no port) of an already-canonical URL, JVM-side.
 
-    The canonical form is regular enough for codegen'd regex — one fewer
-    Python stage per identity subtree than routing it through host_udf
-    (semantics identical to host_series; cross-checked in tests)."""
+    The canonical form is regular enough for codegen'd regex — no
+    Python stage for the host (semantics identical to host_series;
+    cross-checked in tests)."""
     h = F.regexp_extract(canon, r"^[a-z][a-z0-9+.\-]*://([^/?#]*)", 1)
     return F.regexp_replace(h, r":\d+$", "")
 
 
 def canonicalize_col(url: Column) -> Column:
     """Catalyst-expression twin of ``canonicalize_arrow`` — the same
-    canonical rule as a pure column expression, bit-identical output
-    (pinned in tests). NOT the hot path; kept as the zero-dependency
-    fallback and as executable documentation of the canonical rule.
+    canonical rule as a pure column expression, written independently of
+    the RE2 kernels. No engine path calls it: it is the reference that
+    the bit-identity test compares the engine's canonicalizer against,
+    and executable documentation of the canonical rule.
 
     Measured on 16M URLs at local[8]: the Java-regex formulation of
     this expression ran ~4x slower than the RE2 arrow kernels (35s vs
@@ -190,8 +186,7 @@ def canonicalize_col(url: Column) -> Column:
     re-expands every `when` layer's shared subtrees into one enormous
     expression tree, blowing whole-stage codegen's method budget. The
     engine therefore canonicalizes through the Arrow-native UDF
-    (``canonicalize_arrow_udf``); this column exists for environments
-    where Python workers are unavailable."""
+    (``canonicalize_arrow_udf``)."""
     # coalesce mirrors the UDF's fillna(""): null URLs canonicalize to "";
     # btrim over the Unicode White_Space set mirrors pyarrow's
     # utf8_trim_whitespace (plain F.trim strips 0x20 only)
@@ -255,28 +250,12 @@ def canonicalize_col(url: Column) -> Column:
     ).otherwise(F.lower(t))
 
 
-def with_url_identity(
-    df: DataFrame, url_col: str = "url", impl: str = "arrow"
-) -> DataFrame:
+def with_url_identity(df: DataFrame, url_col: str = "url") -> DataFrame:
     """Add url_canon / host / site / url_sha1 / sha_int columns.
 
-    ``impl`` picks the canonicalize flavor — all three are bit-identical
-    (pinned in tests):
-      'arrow'  (default): Arrow-NATIVE UDF — RE2 kernels, the batch
-               stays a pyarrow Array across the worker boundary. The
-               hot path: no pandas-object churn, best multi-core
-               scaling of the three.
-      'pandas': the pandas_udf seam (plugin surface named by the
-               north-star; pays to_pandas/astype(object) per batch).
-      'jvm':   pure Catalyst expressions, no Python workers at all
-               (slowest wall — see canonicalize_col — but
-               dependency-free)."""
-    canon = {
-        "arrow": lambda c: canonicalize_arrow_udf(c),
-        "pandas": lambda c: canonicalize_udf(c),
-        "jvm": lambda c: canonicalize_col(c),
-    }[impl](F.col(url_col))
-    out = df.withColumn("url_canon", canon)
+    The canonical URL comes from the Arrow-native UDF
+    (``canonicalize_arrow_udf``); the rest are JVM-side expressions."""
+    out = df.withColumn("url_canon", canonicalize_arrow_udf(F.col(url_col)))
     out = out.withColumn("host", host_col(F.col("url_canon")))
     out = out.withColumn("site", site_col(F.col("url_canon")))
     out = out.withColumn("url_sha1", sha1_col(F.col("url_canon")))

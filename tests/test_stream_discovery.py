@@ -129,3 +129,52 @@ def test_poller_delta_feed_composes_into_fetch_lists(spark, tmp_path):
     n0 = plans.filter(F.col("epoch") == 0).count()
     n1 = plans.filter(F.col("epoch") == 1).count()
     assert 0 < n1 < n0
+
+
+def test_diff_feed_generation_split_across_triggers(spark, tmp_path):
+    """One feed generation written as two part files that arrive in two
+    separate triggers: the epoch's plan must be the plan over the WHOLE
+    generation, not over the last-delivered part (Spark never
+    re-delivers the first file, so the second trigger must re-read the
+    generation to keep its rows)."""
+    from crunchy_spark.queries import _sitemap_gen_df
+    from crunchy_spark.streaming import stream_discovery_plan
+
+    need_dir = str(tmp_path / "diffs")
+    gen_dir = f"{need_dir}/epoch=0"
+    plan_out = str(tmp_path / "plan")
+    ckpt = str(tmp_path / "ckpt")
+
+    # a bootstrap poll's feed rows: every sitemap URL is 'added'/'fetch'
+    sup = spark.read.parquet(f"{SF}/supplier.parquet").select("s_suppkey")
+    feed = _sitemap_gen_df(sup, 1).select(
+        "host",
+        "url",
+        F.lit(None).cast("string").alias("lastmod_prev"),
+        F.col("lastmod").alias("lastmod_cur"),
+        F.lit("added").alias("status"),
+        F.lit("fetch").alias("action"),
+        F.lit(0).cast("long").alias("epoch"),
+    ).localCheckpoint()
+    first = F.substring(F.col("url"), -1, 1) == "1"
+    rp = QUERIES["robots_policy"](spark, SF).localCheckpoint()
+
+    def trigger():
+        stream_discovery_plan(
+            spark, need_dir, plan_out, ckpt, rp, diff_feed=True
+        ).awaitTermination()
+
+    feed.filter(first).coalesce(1).write.parquet(gen_dir)
+    trigger()
+    time.sleep(1.1)  # distinct mtimes -> the second file is a new arrival
+    feed.filter(~first).coalesce(1).write.mode("append").parquet(gen_dir)
+    trigger()
+
+    want = _rows(
+        discovery_fetch_plan(
+            feed.select("url", F.col("lastmod_cur").alias("lastmod"), "action"),
+            rp,
+        )
+    )
+    got = _rows(spark.read.parquet(f"{plan_out}/epoch=0"))
+    assert want and got == want
