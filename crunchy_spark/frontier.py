@@ -205,14 +205,11 @@ def verify_host_key_injective(hosts: DataFrame, host_col: str = "host") -> None:
         )
 
 
-def max_host_budget(host_policy: DataFrame, round_seconds: float) -> int:
-    """Upper bound on any host's per-round budget: one tiny aggregate
-    over the HOST-sized policy table (never the frontier), floored by
-    the default-policy budget (delay=5s, concurrency=1) that hosts
-    absent from the table receive. Feed the result to
-    ``select_fetchable(max_budget=...)`` so its rank filters carry a
-    plan-time literal (the WindowGroupLimit rewrite condition)."""
-    b = (
+def host_budget_col(round_seconds: float):
+    """Per-host round budget over host_policy columns:
+    max(1, floor(round_seconds / crawl_delay_s)) * max_concurrent, where a
+    host absent from the policy gets delay=5s, concurrency=1."""
+    return (
         F.greatest(
             F.lit(1),
             F.floor(
@@ -221,7 +218,16 @@ def max_host_budget(host_policy: DataFrame, round_seconds: float) -> int:
         )
         * F.coalesce(F.col("max_concurrent"), F.lit(1))
     ).cast("int")
-    row = host_policy.agg(F.max(b).alias("m")).first()
+
+
+def max_host_budget(host_policy: DataFrame, round_seconds: float) -> int:
+    """Upper bound on any host's per-round budget: one tiny aggregate
+    over the HOST-sized policy table (never the frontier), floored by
+    the default-policy budget (delay=5s, concurrency=1) that hosts
+    absent from the table receive. Feed the result to
+    ``select_fetchable(max_budget=...)`` so its rank filters carry a
+    plan-time literal (the WindowGroupLimit rewrite condition)."""
+    row = host_policy.agg(F.max(host_budget_col(round_seconds)).alias("m")).first()
     default_b = max(1, int(round_seconds // 5.0))
     return max(default_b, int(row["m"]) if row and row["m"] is not None else 1)
 
@@ -274,15 +280,15 @@ def select_fetchable(
     rows_per_salt), 1, salt_k) — the mega-host gets the full salt_k
     fan-out while a long tail of small hosts emits no redundant phase-1
     survivors (k=1 makes phase 1 already exact, so phase 2 re-ranks
-    only the rows it keeps). The census is ENGINE-MAINTAINED state
-    (like the bloom): bootstrapped once, updated per round from
-    round-sized deltas (CrawlEngine.host_census_view) — computing it
-    HERE from ``pending`` would re-execute the whole upstream subtree a
-    second time (the Catalyst branch-recomputation trap; it cost 13% at
-    local[8] when this function briefly did so). Census counts only
-    pick k, so a stale census can never change WHICH rows are selected
-    — the two-phase rank is exact for any k. At 10^8+ hosts the
-    broadcast would move to a bucketed map-side join, same as
+    only the rows it keeps). Only the two-phase path reads the census;
+    the single-window path never evaluates it. CrawlEngine passes the
+    pending-per-host aggregate of the very ``pending`` frame it selects
+    from (CrawlEngine.host_census_view), so the counts always match
+    the rows being ranked; the price, paid only on the two-phase path,
+    is one more pass over the pending subtree for that host-sized
+    aggregate. Counts only pick k, so no census can change WHICH rows
+    are selected — the two-phase rank is exact for any k. At 10^8+
+    hosts the broadcast would move to a bucketed map-side join, same as
     host_policy itself. ``census=None`` = fixed salting.
 
     ``global_budget`` additionally caps the whole round by (queue_rank,
@@ -315,78 +321,42 @@ def select_fetchable(
             )
         )
         two_phase = not (0 < max_budget <= wgl_threshold)
-    if not two_phase:
-        # single-window path: census/salting not needed (see docstring)
-        j = pending.join(F.broadcast(host_policy), host_col, "left")
-        j = j.filter(F.coalesce(F.col("robots_allow"), F.lit(True)))
-        budget = (
-            F.greatest(
-                F.lit(1),
-                F.floor(
-                    F.lit(round_seconds)
-                    / F.coalesce(F.col("crawl_delay_s"), F.lit(5.0))
-                ),
-            )
-            * F.coalesce(F.col("max_concurrent"), F.lit(1))
-        ).cast("int")
-        j = j.withColumn("_budget", budget)
-        w2 = Window.partitionBy(host_col).orderBy("queue_rank", "seq")
-        j = j.withColumn("_rn2", F.row_number().over(w2)).filter(
-            (F.col("_rn2") <= F.lit(max_budget))
-            & (F.col("_rn2") <= F.col("_budget"))
-        )
-        if global_budget is not None:
-            wg = Window.orderBy("queue_rank", "seq")
-            j = j.withColumn("_rng", F.row_number().over(wg)).filter(
-                F.col("_rng") <= F.lit(global_budget)
-            )
-        return j.drop(
-            "_budget", "_rn2", "_rng", "crawl_delay_s",
-            "max_concurrent", "robots_allow",
-        )
     # the census folds into the SAME broadcast as the policy (one small-
     # table join on the driver side of the broadcast, one exchange, one
     # probe) — a separate census join added a second broadcast barrier
     # that cost ~10% wall at local[8] for zero benefit
-    if census is not None:
+    pol = host_policy
+    if two_phase and census is not None:
         pol = host_policy.join(
             census.select(host_col, F.col("n_pending").alias("_host_n")),
             host_col,
             "full_outer",
         )
-    else:
-        pol = host_policy
     j = pending.join(F.broadcast(pol), host_col, "left")
     j = j.filter(F.coalesce(F.col("robots_allow"), F.lit(True)))
-    budget = (
-        F.greatest(
-            F.lit(1),
-            F.floor(F.lit(round_seconds) / F.coalesce(F.col("crawl_delay_s"), F.lit(5.0))),
-        )
-        * F.coalesce(F.col("max_concurrent"), F.lit(1))
-    ).cast("int")
-    j = j.withColumn("_budget", budget)
-    if census is not None:
-        k_host = F.least(
-            F.lit(salt_k),
-            F.greatest(
-                F.lit(1),
-                F.ceil(
-                    F.coalesce(F.col("_host_n"), F.lit(1)) / F.lit(rows_per_salt)
+    j = j.withColumn("_budget", host_budget_col(round_seconds))
+
+    def within_budget(rn: str):
+        return (F.col(rn) <= F.lit(max_budget)) & (F.col(rn) <= F.col("_budget"))
+
+    if two_phase:
+        if census is not None:
+            k_host = F.least(
+                F.lit(salt_k),
+                F.greatest(
+                    F.lit(1),
+                    F.ceil(
+                        F.coalesce(F.col("_host_n"), F.lit(1)) / F.lit(rows_per_salt)
+                    ),
                 ),
-            ),
-        )
+            )
+        else:
+            k_host = F.lit(salt_k)
         j = j.withColumn("_salt", F.pmod(F.col("sha_int"), k_host)).drop("_host_n")
-    else:
-        j = j.withColumn("_salt", F.pmod(F.col("sha_int"), F.lit(salt_k)))
-    w1 = Window.partitionBy(host_col, "_salt").orderBy("queue_rank", "seq")
-    j = j.withColumn("_rn1", F.row_number().over(w1)).filter(
-        (F.col("_rn1") <= F.lit(max_budget)) & (F.col("_rn1") <= F.col("_budget"))
-    )
+        w1 = Window.partitionBy(host_col, "_salt").orderBy("queue_rank", "seq")
+        j = j.withColumn("_rn1", F.row_number().over(w1)).filter(within_budget("_rn1"))
     w2 = Window.partitionBy(host_col).orderBy("queue_rank", "seq")
-    j = j.withColumn("_rn2", F.row_number().over(w2)).filter(
-        (F.col("_rn2") <= F.lit(max_budget)) & (F.col("_rn2") <= F.col("_budget"))
-    )
+    j = j.withColumn("_rn2", F.row_number().over(w2)).filter(within_budget("_rn2"))
     if global_budget is not None:
         wg = Window.orderBy("queue_rank", "seq")
         j = j.withColumn("_rng", F.row_number().over(wg)).filter(

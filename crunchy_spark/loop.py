@@ -46,7 +46,6 @@ FRONTIER_COLS = [f.name for f in schemas.FRONTIER.fields]
 class CrawlConfig:
     round_seconds: float = 5.0
     salt_k: int = 16
-    adaptive_salt: bool = True  # per-host salt counts from the census (W3)
     rows_per_salt: int = 4096
     max_attempts: int = 3
     global_budget: int | None = None  # reference-parity mode when =1
@@ -109,12 +108,10 @@ class CrawlEngine:
         empty_fetch_log = self.spark.createDataFrame([], schemas.FETCH_LOG)
         from .bloom import adaptive_m_bits
 
-        census = frontier.groupBy("host").agg(F.count("*").alias("n_pending"))
         return self.store.commit(
             {
                 "frontier": frontier,
                 "seen": seen,
-                "host_census": census,
                 "bloom": build_bloom(seen, m_bits=adaptive_m_bits(int(max_seq) + 1)),
                 "items": empty_items,
                 "lineage": empty_lineage,
@@ -165,9 +162,6 @@ class CrawlEngine:
                 "frontier": new_rows,
                 "seen": seen_new,
                 "bloom": build_bloom(new_rows, m_bits=adaptive_m_bits(n_new)),
-                "host_census": new_rows.groupBy("host").agg(
-                    F.count("*").cast("long").alias("n_pending")
-                ),
             },
             meta={**m["meta"], "max_seq": base_seq + n_new},
             row_counts={"frontier": n_new},
@@ -337,21 +331,24 @@ class CrawlEngine:
         )
 
     # ------------------------------------------------------------------
+    @staticmethod
+    def _census(pending: DataFrame) -> DataFrame:
+        return pending.groupBy("host").agg(F.count("*").alias("n_pending"))
+
     def host_census_view(self) -> DataFrame:
-        """Per-host pending counts, merged across delta segments (a
-        tiny table: one row per host per segment; deltas may be
-        negative). Drives adaptive politeness salting without ever
-        re-scanning the frontier."""
-        raw = self.store.load(self.spark, "host_census")
-        n_seg = len(self.store.manifest()["tables"]["host_census"])
-        if n_seg == 1:
-            return raw
-        return raw.groupBy("host").agg(F.sum("n_pending").alias("n_pending"))
+        """Per-host pending counts (host, n_pending), derived from the
+        merged frontier view — nothing is stored. select_fetchable reads
+        them only on its salted two-phase path, to pick each host's salt
+        count; run_round passes the same aggregate over its own pending
+        frame."""
+        return self._census(
+            self.frontier_view().filter(F.col("status") == "pending")
+        )
 
     # ------------------------------------------------------------------
     def host_delay_view(self) -> DataFrame:
         """Per-host AIMD delay state (host, delay_s) — empty until an
-        adaptive round commits. Host-sized, like host_census."""
+        adaptive round commits. Host-sized, like host_policy."""
         if self.store.has_table("host_delay"):
             return self.store.load(self.spark, "host_delay")
         return self.spark.createDataFrame([], "host string, delay_s double")
@@ -425,8 +422,19 @@ class CrawlEngine:
 
     # ------------------------------------------------------------------
     def run_round(self) -> dict | None:
-        """Run one round; returns stats, or None when the frontier is dry."""
+        """Run one round; returns stats, or None when the frontier is dry.
+
+        A round that finds compact_every or more frontier segments first
+        compacts (and expires snapshots beyond snapshot_keep_last), so
+        read amplification stays bounded even when run() never drains."""
         m = self.store.manifest()
+        if len(m["tables"]["frontier"]) >= self.conf.compact_every:
+            self.compact()
+            # GC beyond the retention window only when compacting — the
+            # cadence that actually creates dead base segments
+            if self.conf.snapshot_keep_last:
+                self.store.expire_snapshots(self.conf.snapshot_keep_last)
+            m = self.store.manifest()
         round_id = int(m["meta"]["round"]) + 1
         base_seq = int(m["meta"]["max_seq"])
         base_fetch_seq = int(m["meta"]["fetch_seq"])
@@ -435,7 +443,6 @@ class CrawlEngine:
         bloom = self.store.load_segments(self.spark, "bloom")
 
         pending = frontier.filter(F.col("status") == "pending")
-        census = self.host_census_view() if self.conf.adaptive_salt else None
         if self._max_budget is None:
             from .frontier import max_host_budget
 
@@ -462,7 +469,7 @@ class CrawlEngine:
             round_seconds=self.conf.round_seconds,
             salt_k=self.conf.salt_k,
             global_budget=self.conf.global_budget,
-            census=census,
+            census=self._census(pending),
             rows_per_salt=self.conf.rows_per_salt,
             max_budget=self._max_budget,
         )
@@ -581,83 +588,32 @@ class CrawlEngine:
         # above, NOTHING written per round scales with corpus size.
         from .bloom import adaptive_m_bits
 
-        # census delta: +1 per newly-enqueued pending row, -1 per row
-        # that LEFT pending this round (fetched/failed; deferred returns
-        # to pending) — both frames are already round-sized in memory
-        census_plus = new_rows.groupBy("host").agg(
-            F.count("*").cast("long").alias("n_pending")
-        )
-        census_minus = (
-            meta.filter(F.col("fetch_status") != "deferred")
-            .groupBy("host")
-            .agg((-F.count("*")).cast("long").alias("n_pending"))
-        )
         appends = {
             "frontier": frontier_delta,
             "seen": seen_new,
             "items": new_items,
             "lineage": lineage_new,
             "fetch_log": log_new,
-            "host_census": census_plus.unionByName(census_minus),
         }
         if n_new:
             appends["bloom"] = build_bloom(
                 new_rows, m_bits=adaptive_m_bits(n_new)
             )
         # AIMD politeness state for NEXT round's effective_policy —
-        # a host-sized overwrite (like host_census on compaction),
-        # folded from this round's log only: O(round + hosts)
+        # a host-sized overwrite, folded from this round's log only:
+        # O(round + hosts)
         tables_out: dict[str, DataFrame] = {}
         if self.conf.adaptive_delay:
             tables_out["host_delay"] = self._fold_host_delay(log_new)
-        n_seg = len(m["tables"]["frontier"])
-        if n_seg + 1 > self.conf.compact_every:
-            # compaction round: fold frontier deltas into a fresh base
-            # segment (Iceberg rewrite_data_files analog) and rebuild the
-            # bloom from the full seen set as ONE right-sized filter —
-            # read amplification and stacked-segment FPR both reset.
-            # `frontier` is already the merged view of the current
-            # segments; the new delta supersedes it.
-            from .frontier import latest_state
-
-            compacted = latest_state(
-                frontier.unionByName(frontier_delta), "sha_int", "state_round"
-            )
-            census_folded = (
-                self.host_census_view()
-                .unionByName(appends.pop("host_census"))
-                .groupBy("host")
-                .agg(F.sum("n_pending").alias("n_pending"))
-            )
-            appends.pop("frontier")
-            appends.pop("bloom", None)
-            self.store.commit(
-                tables={
-                    "frontier": compacted,
-                    "host_census": census_folded,
-                    "bloom": build_bloom(
-                        seen.unionByName(seen_new).select("sha_int"),
-                        m_bits=adaptive_m_bits(int(max_seq) + 1),
-                    ),
-                    **tables_out,
-                },
-                appends=appends,
-                meta=meta_out,
-            )
-            # GC beyond the retention window only on compaction rounds —
-            # the cadence that actually creates dead base segments
-            if self.conf.snapshot_keep_last:
-                self.store.expire_snapshots(self.conf.snapshot_keep_last)
-        else:
-            self.store.commit(
-                tables=tables_out or None,
-                appends=appends,
-                meta=meta_out,
-                # flipped has one row per selected URL (meta is derived
-                # row-locally from the selection), so the delta size is
-                # known without another job
-                row_counts={"frontier": n_selected + n_new},
-            )
+        self.store.commit(
+            tables=tables_out or None,
+            appends=appends,
+            meta=meta_out,
+            # flipped has one row per selected URL (meta is derived
+            # row-locally from the selection), so the delta size is
+            # known without another job
+            row_counts={"frontier": n_selected + n_new},
+        )
         return {
             "round": round_id,
             "selected": n_selected,
@@ -668,10 +624,11 @@ class CrawlEngine:
     def compact(self) -> None:
         """Fold frontier delta segments into a single base segment
         (Iceberg rewrite_data_files analog) and the per-round bloom
-        delta filters into one right-sized filter; manifest meta is
-        preserved. Also makes the raw parquet readable without the merge
-        view — run() compacts on drain so external snapshot readers see
-        the final frontier directly."""
+        delta filters into one right-sized filter built from the full
+        seen set; manifest meta is preserved. The one compaction path:
+        run_round calls it every compact_every frontier segments, and
+        run() on drain, so external snapshot readers see the final
+        frontier as raw parquet without the merge view."""
         m = self.store.manifest()
         tables = {}
         from .bloom import adaptive_m_bits
@@ -687,8 +644,6 @@ class CrawlEngine:
                 seen.select("sha_int"),
                 m_bits=adaptive_m_bits(int(m["meta"].get("max_seq", 0)) + 1),
             )
-        if len(m["tables"].get("host_census", [])) > 1:
-            tables["host_census"] = self.host_census_view()
         if tables:
             self.store.commit(tables=tables, meta=m["meta"])
 

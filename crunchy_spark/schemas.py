@@ -178,18 +178,6 @@ FETCH_LOG = T.StructType(
     ]
 )
 
-# host_census — engine-maintained per-host pending counts (drives
-# adaptive politeness salting, frontier.select_fetchable). Stored as
-# delta segments (n_pending may be negative in a delta); read view sums
-# per host. Bootstrapped from the seed frontier, updated per round from
-# round-sized frames only.
-HOST_CENSUS = T.StructType(
-    [
-        T.StructField("host", T.StringType(), False),
-        T.StructField("n_pending", T.LongType(), False),
-    ]
-)
-
 RATES = T.StructType(
     [
         T.StructField("code", T.StringType(), False),

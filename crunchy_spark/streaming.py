@@ -415,7 +415,7 @@ def stream_fetch_log(
     """Live CDC feed over the engine's fetch_log: a file-source stream on
     the snapshot store's append-only fetch_log segments (one parquet dir
     per committed round, never rewritten — compaction touches only
-    frontier/bloom/host_census, expire_snapshots never collects segments
+    frontier/bloom, expire_snapshots never collects segments
     still referenced by live manifests). Downstream ops monitors consume
     every fetch outcome exactly once via the stream checkpoint, without
     ever re-scanning history — the streaming twin of

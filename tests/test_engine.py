@@ -169,30 +169,42 @@ def test_compaction_folds_deltas(spark, unit_fixtures, tmp_path_factory):
     assert raw.count() >= len(before)
 
 
-def test_host_census_tracks_pending_exactly(spark, unit_fixtures, tmp_path_factory):
-    """The engine-maintained census (bootstrapped once, delta-updated
-    per round) equals a fresh groupBy over the merged frontier's pending
-    rows after every round."""
-    store = SnapshotStore(str(tmp_path_factory.mktemp("census")))
-    eng = CrawlEngine(
-        spark, store, unit_fixtures, CrawlConfig(round_seconds=1e6, global_budget=60)
+def test_compaction_cadence_leaves_outputs_unchanged(
+    spark, unit_fixtures, tmp_path_factory
+):
+    """Compacting every other round (run_round's compact() call) and
+    never compacting within 3 rounds give the same crawl: same pop
+    order, seen set, items and merged frontier. Every snapshot of
+    either store holds exactly the six crawl tables: no engine-kept
+    per-host census rides along."""
+    seeds = spark.read.parquet(f"{unit_fixtures}/frontier_seed.parquet").limit(150)
+    engines = []
+    for tag, extra in (("every2", {"compact_every": 2}), ("default", {})):
+        store = SnapshotStore(str(tmp_path_factory.mktemp(f"cadence_{tag}")))
+        eng = CrawlEngine(
+            spark,
+            store,
+            unit_fixtures,
+            CrawlConfig(round_seconds=1e6, global_budget=60, **extra),
+        )
+        eng.bootstrap(seeds)
+        for _ in range(3):
+            assert eng.run_round() is not None
+        engines.append(eng)
+    a, b = engines
+    assert len(a.store.manifest()["tables"]["frontier"]) == 2  # it compacted
+    assert len(b.store.manifest()["tables"]["frontier"]) == 4  # it did not
+    assert a.crawl_order() == b.crawl_order()
+    assert a.seen_set() == b.seen_set()
+    # both views are unique by their sort key, so the sorted rows compare
+    items = a.items().orderBy("url_sha1").collect()
+    assert items and items == b.items().orderBy("url_sha1").collect()
+    assert (
+        a.frontier_view().orderBy("sha_int").collect()
+        == b.frontier_view().orderBy("sha_int").collect()
     )
-    eng.bootstrap(
-        spark.read.parquet(f"{unit_fixtures}/frontier_seed.parquet").limit(150)
-    )
-    for _ in range(3):
-        if eng.run_round() is None:
-            break
-        got = {
-            r["host"]: r["n_pending"]
-            for r in eng.host_census_view().filter(F.col("n_pending") != 0).collect()
-        }
-        want = {
-            r["host"]: r["n"]
-            for r in eng.frontier_view()
-            .filter(F.col("status") == "pending")
-            .groupBy("host")
-            .agg(F.count("*").alias("n"))
-            .collect()
-        }
-        assert got == want
+    for eng in engines:
+        for v in range(eng.store.current_version() + 1):
+            assert set(eng.store.manifest(v)["tables"]) == {
+                "frontier", "seen", "bloom", "items", "lineage", "fetch_log"
+            }

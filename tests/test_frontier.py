@@ -178,7 +178,7 @@ def test_seed_dedup_keeps_first_arrival(spark):
     assert f[0]["seq"] == 0
 
 
-def test_adaptive_salt_equals_fixed_salt(spark, pending, policy):
+def test_census_salting_equals_fixed_salt(spark, pending, policy):
     """Adaptive per-host salt counts must not change the selection: the
     two-phase ranking is exact for ANY salt count, so adaptive (census)
     and fixed salting pick identical row sets — even with a STALE census

@@ -99,3 +99,30 @@ def test_every_engine_module_is_reached_from_an_entry():
         f"{sorted(set(ALLOWED_UNREACHED) - unreached)}"
     )
 
+
+def test_every_crawl_config_field_is_read():
+    """Every ``CrawlConfig`` field is read as ``conf.<field>`` somewhere in
+    the engine package, so a knob nothing consults cannot linger."""
+    with open(os.path.join(ROOT, PKG, "loop.py")) as f:
+        loop = ast.parse(f.read())
+    (cls,) = [
+        n for n in loop.body if isinstance(n, ast.ClassDef) and n.name == "CrawlConfig"
+    ]
+    fields = {
+        n.target.id
+        for n in cls.body
+        if isinstance(n, ast.AnnAssign) and isinstance(n.target, ast.Name)
+    }
+    assert fields
+    read: set[str] = set()
+    for path in glob.glob(os.path.join(ROOT, PKG, "*.py")):
+        with open(path) as f:
+            tree = ast.parse(f.read(), path)
+        for node in ast.walk(tree):
+            if not (isinstance(node, ast.Attribute) and isinstance(node.ctx, ast.Load)):
+                continue
+            owner = node.value
+            name = owner.id if isinstance(owner, ast.Name) else getattr(owner, "attr", None)
+            if name == "conf":
+                read.add(node.attr)
+    assert fields <= read, f"CrawlConfig fields never read: {sorted(fields - read)}"

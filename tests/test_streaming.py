@@ -230,7 +230,7 @@ def test_stream_crawl_segments_bounded_without_drain(
     come from run_round's in-round compaction (loop.py compact_every).
     The invariant at ANY committed snapshot is compact_every + 1: a
     seed-ingest commit may transiently append one segment beyond the
-    post-round bound before the next round commit folds everything.
+    post-round bound before the next round compacts first.
     Verified against EVERY manifest version the run produced (manifests
     are kept on disk), not just the final one."""
     import time
@@ -278,7 +278,7 @@ def test_stream_crawl_segments_bounded_without_drain(
     compactions = 0
     for v in range(m["version"] + 1):
         tabs = store.manifest(v)["tables"]
-        for t in ("frontier", "bloom", "host_census"):
+        for t in ("frontier", "bloom"):
             n = len(tabs.get(t, []))
             assert n <= bound, f"v{v} table {t}: {n} segments > {bound}"
         n_frontier = len(tabs.get("frontier", []))
